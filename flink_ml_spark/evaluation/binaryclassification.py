@@ -5,18 +5,14 @@ Reference: evaluation/binaryclassification/BinaryClassificationEvaluator.java:76
 reference samples score boundaries, range-partitions, sorts partitions and
 merges partial (TP/FP) summaries (:376-450) to get an exact tie-aware AUC.
 
-Spark-first exact plan with the same geometry:
-
-1. ``groupBy(score)`` → one row per distinct score with (pos, neg) weight
-   sums (map-side combine; ties collapse here).
-2. ``repartitionByRange(desc(score))`` — Spark samples boundaries exactly
-   like the reference's ``getBoundaryRangeOfPartitions`` — then a
-   per-partition descending sort + running cumsum (Arrow ``mapInPandas``;
-   linear, no global single-task sort).
-3. Per-partition (pos, neg) totals are tiny (2 doubles × numPartitions);
-   they come to the driver once and go back as a broadcast prefix-offset
-   join, turning local cumsums into global ones — the reference's
-   partial-summary merge (:430-450).
+Plan: ``groupBy(score)`` collapses ties to one row per distinct score
+with (pos, neg) weight sums (map-side combine).  One pass over that
+persisted relation yields its size m, the totals and the invalid-input
+counts; ``common.dataflow.ordered_cumsum`` then orders it by descending
+score and takes the running (pos, neg) sums — in driver memory when the
+m-row relation fits the driver budget (one Arrow collect), otherwise with
+the reference's geometry: sampled range boundaries, per-partition sorts
+and a merge of partial summaries as broadcast prefix offsets (:430-450).
 
 Closed-form tie-aware metrics over the global cumulative columns
 (cpd/cnd = positives/negatives at-or-above the score):
@@ -30,43 +26,79 @@ Closed-form tie-aware metrics over the global cumulative columns
   Lorenz = trapezoid over the descending (positiveRate, tpr) gain curve
            (BinaryClassificationEvaluator.java:316-317).
 
-Weighted variants via ``weightCol``.
+Weighted variants via ``weightCol``.  A null or NaN score and a null
+label have no place in the ranking: they raise ``ValueError`` naming the
+column, in both regimes.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import AlgoOperator
+from ..common.dataflow import driver_frame, ordered_cumsum
 from ..param import HasLabelCol, HasRawPredictionCol, HasWeightCol
 
+_SCHEMA = ("areaUnderROC double, areaUnderPR double, ks double, "
+           "areaUnderLorenz double")
 
-def _local_cumsum(batches):
-    """Running (pos, neg) cumsum across the Arrow batches of one partition.
 
-    Rows arrive sorted by score descending (sortWithinPartitions upstream),
-    so the running totals are the partition-local descending cumulatives.
-    """
-    cp = 0.0
-    cn = 0.0
-    for pdf in batches:
-        lcp = pdf["pos"].cumsum() + cp
-        lcn = pdf["neg"].cumsum() + cn
-        if len(pdf):
-            cp = float(lcp.iloc[-1])
-            cn = float(lcn.iloc[-1])
-        yield pd.DataFrame({
-            "pid": pdf["pid"], "pos": pdf["pos"], "neg": pdf["neg"],
-            "lcp": lcp, "lcn": lcn,
-        })
+def score_totals(grouped: DataFrame, who: str, rcol: str, lcol: str,
+                 *aggs):
+    """One pass over a relation grouped by score ``s`` (and carrying a
+    ``null_y`` count): its row count ``m`` and ``aggs``.  A null or NaN
+    score and a null label have no place in a ranking, so they raise
+    ``ValueError`` naming the column."""
+    s = F.col("s")
+    tot = grouped.agg(F.count("*").alias("m"),
+                      F.sum("null_y").alias("null_y"),
+                      F.count(F.when(s.isNull() | F.isnan(s), 1))
+                      .alias("bad_s"), *aggs).first()
+    if tot["bad_s"]:
+        raise ValueError(f"{who}: rawPredictionCol '{rcol}' has null or "
+                         f"NaN scores")
+    if tot["null_y"]:
+        raise ValueError(f"{who}: labelCol '{lcol}' has {tot['null_y']} "
+                         f"null labels")
+    return tot
+
+
+def _metric_terms(P: float, N: float):
+    """The four metrics over the descending cumulatives, as one formula
+    for both regimes of ``ordered_cumsum``."""
+    def terms(fn, c):
+        pos, neg, cpd, cnd = c("pos"), c("neg"), c("cum_pos"), c("cum_neg")
+        prev_pos = cpd - pos
+        prev_tot = prev_pos + cnd - neg
+        return {
+            # tie-aware Mann-Whitney: each positive-group counts negatives
+            # strictly below (= N - cnd) + half of same-score negatives
+            "u": fn.sum(pos * ((N - cnd) + neg / 2)),
+            "ks": fn.max(fn.abs(cpd / P - cnd / N)),
+            # AUPRC: trapezoid between consecutive distinct-score points of
+            # (recall = cpd/P, precision = cpd/(cpd+cnd)); previous
+            # precision for the first point is 1.0 (reference :289-295)
+            "auprc": fn.sum((pos / P) * ((cpd / (cpd + cnd)) + fn.where(
+                prev_tot == 0.0, 1.0, prev_pos / prev_tot)) / 2),
+            # Lorenz gain curve, descending: x = cum fraction of samples
+            # (positiveRate), y = cum fraction of positives (tpr)
+            "lorenz": fn.sum(((pos + neg) / (P + N))
+                             * ((cpd - pos) + cpd) / P / 2),
+        }
+    return terms
 
 
 class BinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
                                     HasRawPredictionCol, HasWeightCol):
     """transform(df) -> one-row DataFrame with columns
     areaUnderROC, areaUnderPR, ks, areaUnderLorenz."""
+
+    @property
+    def last_plan_(self) -> str:
+        """Plan of the last transform's ordering step: the range-partitioned
+        sort, or the relation collected to the driver (for tests and
+        debugging)."""
+        return self._ordered_by._jdf.queryExecution().toString()
 
     def transform(self, *inputs: DataFrame) -> list[DataFrame]:
         (df,) = inputs
@@ -79,94 +111,35 @@ class BinaryClassificationEvaluator(AlgoOperator, HasLabelCol,
         rtype = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)[rcol]
         score = (F.element_at(F.col(rcol), 2) if rtype.startswith("array")
                  else F.col(rcol).cast("double"))
-        base = df.select(score.alias("score"),
-                         F.col(lcol).cast("double").alias("y"), w.alias("w"))
-        grouped = (base.groupBy("score")
-                   .agg(F.sum(F.when(F.col("y") == 1.0, F.col("w")).otherwise(0.0)).alias("pos"),
-                        F.sum(F.when(F.col("y") != 1.0, F.col("w")).otherwise(0.0)).alias("neg"))
+        y = F.col("y")
+        grouped = (df.select(score.alias("s"),
+                             F.col(lcol).cast("double").alias("y"),
+                             w.alias("w"))
+                   .groupBy("s")
+                   .agg(F.sum(F.when(y == 1.0, F.col("w")).otherwise(0.0)).alias("pos"),
+                        F.sum(F.when(y != 1.0, F.col("w")).otherwise(0.0)).alias("neg"),
+                        F.count(F.when(y.isNull(), 1)).alias("null_y"))
                    .persist())
         try:
             # ONE pass materializes the (distinct-score-sized) cache and
-            # yields the global totals + row count; every later job reads
-            # the cache instead of re-executing the input aggregation (the
-            # range-partition boundary sampling alone used to re-run it).
-            tot = grouped.agg(F.count("*").alias("m"),
-                              F.sum("pos").alias("p"),
-                              F.sum("neg").alias("n")).collect()[0]
+            # yields its size, the totals and the invalid-input counts
+            tot = score_totals(grouped, "BinaryClassificationEvaluator",
+                               rcol, lcol, F.sum("pos").alias("p"),
+                               F.sum("neg").alias("n"))
             P = float(tot["p"] or 0.0)
             N = float(tot["n"] or 0.0)
             if P == 0 or N == 0:
-                out = spark.createDataFrame(
-                    [(float("nan"),) * 4],
-                    "areaUnderROC double, areaUnderPR double, ks double, areaUnderLorenz double")
-                return [out]
-            npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            # size the range partitioning to the observed distinct-score
-            # count (~64k rows/partition target, AQE-style): tie collapse
-            # often shrinks the relation by orders of magnitude, and a
-            # 1-partition cumsum over a tiny relation beats 32 near-empty
-            # Arrow workers
-            npart = max(1, min(npart, int(tot["m"]) // 65536 + 1))
-            # Range partition on descending score (sampled boundaries, like
-            # the reference), then per-partition sort + linear cumsum.
-            part = (grouped.repartitionByRange(npart, F.col("score").desc())
-                    .sortWithinPartitions(F.col("score").desc())
-                    .withColumn("pid", F.spark_partition_id())
-                    .persist())
-            if npart == 1:
-                offs = [(0, 0.0, 0.0)]
-            else:
-                ptot = sorted(part.groupBy("pid")
-                              .agg(F.sum("pos").alias("p"), F.sum("neg").alias("n"))
-                              .collect(), key=lambda r: r["pid"])
-                # prefix offsets: everything in partitions of higher score
-                offs, op, on = [], 0.0, 0.0
-                for r in ptot:
-                    offs.append((int(r["pid"]), op, on))
-                    op += float(r["p"])
-                    on += float(r["n"])
-            odf = spark.createDataFrame(offs, "pid int, off_p double, off_n double")
-            local = part.mapInPandas(
-                _local_cumsum,
-                "pid int, pos double, neg double, lcp double, lcn double")
-            cum = (local.join(F.broadcast(odf), "pid")
-                   .select("pos", "neg",
-                           (F.col("lcp") + F.col("off_p")).alias("cpd"),
-                           (F.col("lcn") + F.col("off_n")).alias("cnd")))
-            # kept for tests/debugging: the cumulative stage's physical plan
-            # must show a range-partitioned exchange, never a global Window
-            self.last_plan_ = cum._jdf.queryExecution().toString()
-            prev_pos = F.col("cpd") - F.col("pos")
-            prev_tot = prev_pos + F.col("cnd") - F.col("neg")
-            agg = cum.agg(
-                # tie-aware Mann-Whitney: each positive-group counts negatives
-                # strictly below (= N - cnd) + half of same-score negatives
-                F.sum(F.col("pos") * ((N - F.col("cnd")) + F.col("neg") / 2)).alias("u"),
-                F.max(F.abs(F.col("cpd") / P - F.col("cnd") / N)).alias("ks"),
-                # AUPRC: trapezoid between consecutive distinct-score points of
-                # (recall = cpd/P, precision = cpd/(cpd+cnd)); previous
-                # precision for the first point is 1.0 (reference :289-295)
-                F.sum(
-                    (F.col("pos") / P) *
-                    ((F.col("cpd") / (F.col("cpd") + F.col("cnd"))) +
-                     F.when(prev_tot == 0.0, F.lit(1.0))
-                     .otherwise(prev_pos / prev_tot)) / 2
-                ).alias("auprc"),
-                # Lorenz gain curve, descending: x = cum fraction of samples
-                # (positiveRate), y = cum fraction of positives (tpr)
-                F.sum(
-                    ((F.col("pos") + F.col("neg")) / (P + N)) *
-                    ((F.col("cpd") - F.col("pos")) + F.col("cpd")) / P / 2
-                ).alias("lorenz"),
-            ).collect()[0]
+                return [driver_frame(spark, [(float("nan"),) * 4], _SCHEMA)]
+            rel = grouped.select("s", "pos", "neg")
+            cum = ordered_cumsum(rel, [("s", False)], ["pos", "neg"],
+                                 int(tot["m"]), exact=True)
+            self._ordered_by = cum.source
+            try:
+                agg = cum.agg(_metric_terms(P, N))
+            finally:
+                cum.release()
         finally:
             grouped.unpersist()
-            try:
-                part.unpersist()
-            except NameError:  # early exit before `part` exists (P/N == 0)
-                pass
-        auc = float(agg["u"]) / (P * N)
-        out = spark.createDataFrame(
-            [(auc, float(agg["auprc"]), float(agg["ks"]), float(agg["lorenz"]))],
-            "areaUnderROC double, areaUnderPR double, ks double, areaUnderLorenz double")
-        return [out]
+        return [driver_frame(spark, [(
+            float(agg["u"]) / (P * N), float(agg["auprc"]),
+            float(agg["ks"]), float(agg["lorenz"]))], _SCHEMA)]

@@ -39,16 +39,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..api import AlgoOperator, Transformer
+from ..common.dataflow import ordered_cumsum
 from ..param import (BoolParam, HasInputCol, IntParam, Param,
                      ParamValidators, StringArrayParam, StringParam)
 
 _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
-
-# KeySkewProfiler: key relations at or under this size take the ordered-
-# collect driver path (they would occupy one range partition anyway);
-# above it, the range-partitioned distributed cumsum runs.  Module-level
-# so tests can force the distributed path on small data.
-_SKEW_LOCAL_MAX = 65536
 
 _PROFILE_SCHEMA = T.StructType([
     T.StructField("group", T.StringType()),
@@ -770,10 +765,13 @@ class KeySkewProfiler(Transformer, HasInputCol):
     AQE skew join BEFORE it runs at 100 TB, not after.
 
     Plan: ONE ``groupBy(key)`` count (map-side combine) collapses the
-    corpus to the distinct-key relation; the rank/cumulative window and
-    the Gini aggregation run over THAT — cardinality-sized, the same
+    corpus to the distinct-key relation; the ranks, cumulatives and the
+    Gini aggregation run over THAT — cardinality-sized, the same
     contract as the MI/frequent-items analyzers (an id-like key column
-    is the caller's bug, and ``maxKeys`` fails fast on it).
+    is the caller's bug, and ``maxKeys`` fails fast on it).  The ranks
+    come from ``common.dataflow.ordered_cumsum`` in (cnt, key DESC) order,
+    the reverse of the report's, so rank = m − i + 1 and the descending
+    cumulative = n − cum_asc + cnt.
 
     Gini over per-key counts x₁…x_m sorted ascending:
       G = 2·Σᵢ i·xᵢ / (m·Σx) − (m+1)/m      (i = 1-based ascending rank)
@@ -790,13 +788,15 @@ class KeySkewProfiler(Transformer, HasInputCol):
                     lambda v: int(v) > 0)
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
         key = self.get_("inputCol")
         spark = df.sparkSession
         counts = (df.groupBy(F.col(key).alias("key"))
                   .agg(F.count("*").alias("cnt"))
                   .localCheckpoint(eager=True))
-        m = counts.count()
+        skey = F.col("key").cast("string")
+        size = counts.agg(F.count("*").alias("m"),
+                          F.sum(F.octet_length(skey)).alias("b")).first()
+        m = int(size["m"])
         if m == 0:
             return spark.createDataFrame(
                 [], "key string, cnt long, share double, rank long, "
@@ -806,106 +806,27 @@ class KeySkewProfiler(Transformer, HasInputCol):
             raise ValueError(
                 f"KeySkewProfiler saw {m} distinct keys in '{key}' "
                 f"(> maxKeys={self.get_('maxKeys')}); is this an id column?")
-        if m <= _SKEW_LOCAL_MAX:
-            # model-sized key relation (it would occupy ONE range
-            # partition below anyway — npart = m // 65536 + 1): one
-            # ordered collect of the checkpointed counts replaces the
-            # range-partition / per-partition-cumsum / offset-broadcast
-            # machinery (~4 scheduler round-trips → 1; r10, guide §1.2).
-            # The sort runs in Spark (same ascending (cnt, key desc)
-            # order, so null/type ordering is the engine's), cumsums and
-            # top-k sums are exact integers, and iw accumulates doubles
-            # sequentially in the same ascending order as the former
-            # single-partition sum — outputs are bit-identical.
-            k = int(self.get_("topK"))
-            rows = (counts.orderBy(F.col("cnt").asc(), F.col("key").desc())
-                    .select(F.col("key").cast("string").alias("key"), "cnt")
-                    .collect())
-            ntot = sum(r["cnt"] for r in rows)
-            n = float(ntot)
-            iw = 0.0
-            for i, r in enumerate(rows):
-                iw += float(i + 1) * r["cnt"]
-            gini = 2.0 * iw / (m * n) - (m + 1) / m
-            t1 = sum(r["cnt"] for i, r in enumerate(rows) if m - i <= 1)
-            tk = sum(r["cnt"] for i, r in enumerate(rows) if m - i <= k)
-            out, ca = [], 0
-            for i, r in enumerate(rows):
-                ca += r["cnt"]
-                out.append((r["key"], int(r["cnt"]), r["cnt"] / n,
-                            m - i, (ntot - ca + r["cnt"]) / n,
-                            float(gini), float(t1) / n, float(tk) / n))
-            return spark.createDataFrame(
-                out, "key string, cnt long, share double, rank long, "
-                     "cum_share double, gini double, top1_share double, "
-                     "topk_share double")
-        # ascending range-partitioned cumsum (the exact-KS geometry — no
-        # single-task global Window even at 10M distinct keys): ascending
-        # index i and inclusive cum per partition, broadcast prefix
-        # offsets make them global.  Descending rank / cum_share derive
-        # from the ascending pass: with asc order (cnt, key DESC), the
-        # desc order (cnt DESC, key ASC) is its exact reverse, so
-        # rank = m − i + 1 and cum_desc = n − cum_asc + cnt.
-        npart = max(1, min(int(spark.conf.get(
-            "spark.sql.shuffle.partitions", "32")), m // 65536 + 1))
-        part = (counts.repartitionByRange(
-                    npart, F.col("cnt").asc(), F.col("key").desc())
-                .sortWithinPartitions(F.col("cnt").asc(), F.col("key").desc())
-                .withColumn("pid", F.spark_partition_id())
-                .localCheckpoint(eager=True))
-        if npart == 1:
-            offs = [(0, 0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid")
-                          .agg(F.count("*").alias("r"),
-                               F.sum("cnt").alias("s")).collect(),
-                          key=lambda r: r["pid"])
-            offs, oi, oc = [], 0, 0
-            for r in ptot:
-                offs.append((int(r["pid"]), oi, oc))
-                oi += int(r["r"])
-                oc += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, ioff long, coff long")
-
-        def cum(batches):
-            i = 0
-            c = 0
-            for pdf in batches:
-                li = pd.RangeIndex(i + 1, i + 1 + len(pdf)).to_series(
-                    index=pdf.index)
-                lc = pdf["cnt"].cumsum() + c
-                if len(pdf):
-                    i += len(pdf)
-                    c = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "key": pdf["key"],
-                                    "cnt": pdf["cnt"], "i": li, "lc": lc})
-
-        local = part.mapInPandas(
-            cum, "pid int, key string, cnt long, i long, lc long")
-        ranked = (local.join(F.broadcast(odf), "pid")
-                  .select("key", "cnt",
-                          (F.col("i") + F.col("ioff")).alias("__i__"),
-                          (F.col("lc") + F.col("coff")).alias("__ca__")))
+        rel = counts.select("key", skey.alias("skey"), "cnt",
+                            F.lit(1).cast("long").alias("i"))
+        cum = ordered_cumsum(
+            rel, [("cnt", True), ("key", False)], ["i", "cnt"], m,
+            2 * int(size["b"] or 0), exact=True)
         k = int(self.get_("topK"))
-        rank = F.lit(m) - F.col("__i__") + 1
-        tot = ranked.agg(
-            F.sum("cnt").alias("n"),
-            F.sum(F.col("__i__").cast("double") * F.col("cnt")).alias("iw"),
-            F.sum(F.when(rank <= 1, F.col("cnt")).otherwise(F.lit(0)))
-             .alias("t1"),
-            F.sum(F.when(rank <= k, F.col("cnt")).otherwise(F.lit(0)))
-             .alias("tk")).first()
-        n = float(tot["n"])
+        rank = lambda c: m - c("cum_i") + 1
+        tot = cum.agg(lambda fn, c: {
+            "n": fn.sum(c("cnt")),
+            "iw": fn.sum(c("cum_i") * 1.0 * c("cnt")),
+            "t1": fn.sum(fn.where(rank(c) <= 1, c("cnt"), 0)),
+            "tk": fn.sum(fn.where(rank(c) <= k, c("cnt"), 0))})
+        ntot = int(tot["n"])
+        n = float(ntot)
         gini = 2.0 * float(tot["iw"]) / (m * n) - (m + 1) / m
-        cum_desc = F.lit(int(tot["n"])) - F.col("__ca__") + F.col("cnt")
-        return (ranked
-                .select(F.col("key").cast("string").alias("key"), "cnt",
-                        (F.col("cnt") / F.lit(n)).alias("share"),
-                        rank.cast("long").alias("rank"),
-                        (cum_desc / F.lit(n)).alias("cum_share"),
-                        F.lit(float(gini)).alias("gini"),
-                        F.lit(float(tot["t1"]) / n).alias("top1_share"),
-                        F.lit(float(tot["tk"]) / n).alias("topk_share")))
+        return cum.select(lambda fn, c: {
+            "key": c("skey"), "cnt": c("cnt"), "share": c("cnt") / n,
+            "rank": rank(c),
+            "cum_share": (ntot - c("cum_cnt") + c("cnt")) / n,
+            "gini": float(gini), "top1_share": float(tot["t1"]) / n,
+            "topk_share": float(tot["tk"]) / n})
 
 
 class VocabGrowthProfiler(Transformer, HasInputCol):

@@ -531,16 +531,19 @@ class FrequentLineFilterModel(Model):
         # replaces it: same split/filter/join semantics (split("\n")
         # keeps trailing empties in both engines; null text stays
         # null), zero shuffles, set shipped once per executor.
-        # one broadcast per (model, SparkContext), cached on the
-        # instance: a fresh broadcast per _transform call would
+        # one broadcast per (model, SparkContext, drop set), cached on
+        # the instance: a fresh broadcast per _transform call would
         # accumulate until the ContextCleaner notices the UDF refs are
-        # gone — nondeterministic on a long-lived driver (ADVICE r09)
+        # gone — nondeterministic on a long-lived driver (ADVICE r09).
+        # The set itself is the key, so a changed model_data is never
+        # served from a stale broadcast.
         sc = df.sparkSession.sparkContext
+        bset = frozenset(drop)
         cached = getattr(self, "_bset_cache", None)
-        if cached is None or cached[0] is not sc:
-            cached = (sc, sc.broadcast(frozenset(drop)))
+        if cached is None or cached[0] is not sc or cached[1] != bset:
+            cached = (sc, bset, sc.broadcast(bset))
             self._bset_cache = cached
-        bset_b = cached[1]
+        bset_b = cached[2]
 
         @F.pandas_udf("string")
         def _clean(texts: pd.Series) -> pd.Series:

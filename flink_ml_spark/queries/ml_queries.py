@@ -899,7 +899,7 @@ FROM f, s
 def ks_test(spark, sf_dir):
     """Two-sample Kolmogorov–Smirnov: l_extendedprice distribution of
     linestatus 'F' vs 'O' rows.  D via the evaluator's exact
-    range-partitioned ECDF; asymptotic p replayed by the oracle's
+    ordered-cumsum ECDF; asymptotic p replayed by the oracle's
     Kolmogorov series over generate_series."""
     from ..stats import KolmogorovSmirnovTest
     li = load(spark, sf_dir, "lineitem")
@@ -937,7 +937,7 @@ FROM t, d, p
 
 def spearman_corr(spark, sf_dir):
     """Spearman rank correlation (l_quantity vs l_extendedprice):
-    average-tie midranks via the range-partition cumsum, exact decimal
+    average-tie midranks via the ordered cumsum, exact integer
     rank sums.  The oracle replays midranks with a window over the
     distinct-value relation; p is driver arithmetic from rho (pytest-
     pinned — incomplete beta isn't SQL-expressible)."""
@@ -1004,7 +1004,7 @@ FROM m
 
 def conformal_interval(spark, sf_dir):
     """ConformalRegressor: split-conformal q on a calibration split
-    (k-th order statistic via range-partition cumsum), then held-out
+    (k-th order statistic via the ordered cumsum), then held-out
     coverage counts per linestatus — n_cov/n ≥ 0.8 by the conformal
     guarantee.  Integer-exact contract: (n, n_cov) counts plus q — an
     order-statistic DATA VALUE (|25 + 100·disc − qty|, 2-dp precision),

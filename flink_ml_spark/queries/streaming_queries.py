@@ -1027,9 +1027,10 @@ def streaming_funnel(spark, sf_dir):
     FILE batch — it only re-advanced a watermark already past every
     user's timeout, which the no-data batch the engine appends anyway
     fires identically: profiled 4 executed micro-batches → 3.)  The
-    inactivity gap exceeds the stream's span, so no user emits
-    mid-stream — output semantics (and oracle) are identical to the
-    batch FunnelAnalyzer / FUNNEL_SQL."""
+    query pins that setting to true while it runs and restores the
+    session's value afterwards.  The inactivity gap exceeds the
+    stream's span, so no user emits mid-stream — output semantics (and
+    oracle) are identical to the batch FunnelAnalyzer / FUNNEL_SQL."""
     import os
     import shutil
     import tempfile
@@ -1049,8 +1050,11 @@ def streaming_funnel(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="streaming_funnel_")
     view = f"streaming_funnel_{uuid.uuid4().hex[:8]}"
     q = None
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_no_data = spark.conf.get(no_data)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set(no_data, "true")
     try:
         os.mkdir(os.path.join(tmp, "in"))
         parts = [data.where(F.col("ts_ms") <= mid),
@@ -1081,6 +1085,7 @@ def streaming_funnel(spark, sf_dir):
                           .alias("stages_completed"))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.conf.set(no_data, prev_no_data)
         if q is not None and q.isActive:
             q.stop()
         shutil.rmtree(tmp, ignore_errors=True)

@@ -11,64 +11,40 @@ q is the k-th smallest absolute residual on the calibration split with
 k = ⌈(n+1)(1−α)⌉ — an ORDER STATISTIC, not an interpolated percentile
 (interpolation breaks the coverage guarantee at small n).
 
-Scale design: the k-th order statistic is computed distributedly —
-``groupBy(residual)`` tie collapse, then the range-partitioned
-per-partition cumsum with broadcast prefix offsets (the exact-KS /
-midrank geometry; no global single-task sort, nothing corpus-sized
-collected); the threshold is the first residual whose global cumulative
-count reaches k.  The model carries one double.
+Scale design: ``groupBy(residual)`` collapses ties, then
+``common.dataflow.ordered_cumsum`` takes the ascending running count —
+in driver memory when the distinct residuals (at most the n calibration
+rows) fit the driver budget, range-partitioned otherwise (no global
+single-task sort, nothing corpus-sized collected); the threshold is the
+first residual whose running count reaches k.  The model carries one
+double.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import Estimator, Model
+from ..common.dataflow import ordered_cumsum
 from ..param import (FloatParam, HasLabelCol, HasPredictionCol,
                      ParamValidators, StringParam)
 
 
-def _kth_smallest(df: DataFrame, col: str, k: int) -> float:
-    """Exact k-th smallest value of ``col`` (1-based), distributed."""
-    spark = df.sparkSession
-    g = (df.groupBy(F.col(col).cast("double").alias("v"))
-         .agg(F.count("*").alias("c")).persist())
+def _kth_smallest(df: DataFrame, col: str, k: int, n: int) -> float:
+    """Exact k-th smallest value of ``col`` (1-based) over its ``n`` rows:
+    the first value in ascending order whose running count reaches k."""
+    g = df.groupBy(F.col(col).cast("double").alias("v")) \
+        .agg(F.count("*").alias("c"))
+    cum = ordered_cumsum(g, [("v", True)], ["c"], n)
+    if cum.local:
+        at = np.searchsorted(cum.table.column("cum_c").to_numpy(), k)
+        return float(cum.table.column("v")[int(at)].as_py())
     try:
-        m = g.count()
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        npart = max(1, min(npart, m // 65536 + 1))
-        part = (g.repartitionByRange(npart, F.col("v").asc())
-                .sortWithinPartitions(F.col("v").asc())
-                .withColumn("pid", F.spark_partition_id()).persist())
-        if npart == 1:
-            offs = [(0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid").agg(F.sum("c").alias("s"))
-                          .collect(), key=lambda r: r["pid"])
-            offs, o = [], 0
-            for r in ptot:
-                offs.append((int(r["pid"]), o))
-                o += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, off long")
-
-        def cum(batches):
-            run = 0
-            for pdf in batches:
-                lc = pdf["c"].cumsum() + run
-                if len(pdf):
-                    run = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "v": pdf["v"],
-                                    "lc": lc})
-
-        local = part.mapInPandas(cum, "pid int, v double, lc long")
-        row = (local.join(F.broadcast(odf), "pid")
-               .filter((F.col("lc") + F.col("off")) >= k)
-               .agg(F.min("v")).first())
-        return float(row[0])
+        return float(cum.frame.filter(F.col("cum_c") >= k)
+                     .agg(F.min("v")).first()[0])
     finally:
-        g.unpersist()
+        cum.release()
 
 
 class ConformalRegressor(Estimator, HasLabelCol, HasPredictionCol):
@@ -103,7 +79,7 @@ class ConformalRegressor(Estimator, HasLabelCol, HasPredictionCol):
                 f"ConformalRegressor: n={n} calibration rows cannot "
                 f"certify coverage 1-alpha={1 - alpha} (needs k={k} ≤ n); "
                 f"lower alpha or add calibration data")
-        q = _kth_smallest(scores, "s", k)
+        q = _kth_smallest(scores, "s", k, n)
         model = ConformalRegressorModel()
         model.set_(predictionCol=self.get_("predictionCol"))
         model.model_data = {"q": q, "n": int(n), "k": int(k),

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..api import AlgoOperator
+from ..common.dataflow import (ascending_codes, driver_frame,
+                               ordered_cumsum, sized)
 from ..param import HasFeaturesCol, StringParam
 
 _SCHEMA = T.StructType([
@@ -133,53 +135,36 @@ class MutualInformation(AlgoOperator):
             df.sparkSession.createDataFrame(cell_rows, cell_schema)]
 
 
-def _midranks(df: DataFrame, col: str) -> DataFrame:
-    """``(v, r2)``: per distinct value of ``col``, TWICE the average-tie
-    midrank (``2·(cnt_less + (cnt+1)/2) = 2·cnt_less + cnt + 1`` — always
-    an integer, so rank sums stay exact).  Same scale geometry as
-    BinaryClassificationEvaluator's exact KS: ``groupBy(value)`` tie
-    collapse, range-partitioned per-partition cumsum, broadcast prefix
-    offsets — no global single-task sort, nothing corpus-sized collected."""
-    import pandas as pd
-    spark = df.sparkSession
-    g = (df.groupBy(F.col(col).cast("double").alias("v"))
-         .agg(F.count("*").alias("c")).persist())
-    try:
-        m = g.count()
-        if m == 0:
-            return spark.createDataFrame([], "v double, r2 long")
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        npart = max(1, min(npart, m // 65536 + 1))
-        part = (g.repartitionByRange(npart, F.col("v").asc())
-                .sortWithinPartitions(F.col("v").asc())
-                .withColumn("pid", F.spark_partition_id()).persist())
-        if npart == 1:
-            offs = [(0, 0)]
-        else:
-            ptot = sorted(part.groupBy("pid").agg(F.sum("c").alias("s"))
-                          .collect(), key=lambda r: r["pid"])
-            offs, o = [], 0
-            for r in ptot:
-                offs.append((int(r["pid"]), o))
-                o += int(r["s"])
-        odf = spark.createDataFrame(offs, "pid int, off long")
+def _exact_dot(w: np.ndarray, v: np.ndarray) -> int:
+    """Σ w·v as a Python int, exact for non-negative int64 ``w`` and ``v``
+    while Σw < 2^31: ``v`` splits at 2^32, so neither int64 partial sum
+    can overflow (Σ c·rx·ry overflows int64 itself at ~1.3 M rows)."""
+    hi, lo = np.divmod(v, 1 << 32)
+    return (int((w * hi).sum()) << 32) + int((w * lo).sum())
 
-        def cum(batches):
-            run = 0
-            for pdf in batches:
-                lc = pdf["c"].cumsum() + run
-                if len(pdf):
-                    run = int(lc.iloc[-1])
-                yield pd.DataFrame({"pid": pdf["pid"], "v": pdf["v"],
-                                    "c": pdf["c"], "lc": lc})
 
-        local = part.mapInPandas(cum, "pid int, v double, c long, lc long")
-        # 2·midrank = 2·(cum_incl − c) + c + 1
-        return (local.join(F.broadcast(odf), "pid")
-                .select("v", (2 * (F.col("lc") + F.col("off") - F.col("c"))
-                              + F.col("c") + 1).alias("r2")))
-    finally:
-        g.unpersist()
+def _midranks_local(v, c: np.ndarray):
+    """Per row of a collected tie-collapsed relation (value column ``v``,
+    multiplicity ``c``): TWICE its value's average-tie midrank, 2·cum − t
+    + 1 — an integer, so rank sums stay exact — and ``t`` per distinct
+    value, in Spark's order (``dataflow.ascending_codes``)."""
+    _, inv = np.unique(ascending_codes(v), return_inverse=True)
+    t = np.bincount(inv, weights=c).astype(np.int64)
+    return (2 * np.cumsum(t) - t + 1)[inv], t
+
+
+def _midranks(joint: DataFrame, col: str, rows: int,
+              held: list) -> DataFrame:
+    """``_midranks_local`` for a ``joint`` relation (multiplicity ``c``, at
+    most ``rows`` rows) that stays distributed: ``(v, t, r2)`` per distinct
+    value of ``col``, from ``ordered_cumsum``'s running count over the
+    marginal in whichever regime it fits.  Appends the ``Relation`` to
+    ``held`` for the caller to release."""
+    marg = joint.groupBy(F.col(col).alias("v")).agg(F.sum("c").alias("t"))
+    cum = ordered_cumsum(marg, [("v", True)], ["t"], rows)
+    held.append(cum)
+    return cum.select(lambda fn, c: {
+        "v": c("v"), "t": c("t"), "r2": 2 * c("cum_t") - c("t") + 1})
 
 
 class SpearmanCorrelation(AlgoOperator):
@@ -190,13 +175,15 @@ class SpearmanCorrelation(AlgoOperator):
     robust choice for heavy-tailed corpus statistics (doc lengths,
     frequency counts) where Pearson is leverage-dominated.
 
-    Scale design: midranks per column via ``_midranks`` (range-partition
-    cumsum, no global sort), two hash joins back to the rows, then ONE
-    aggregation of integer rank sums (doubled midranks are integers, so
-    the sums are bit-exact and partition-order independent — the
-    determinism lesson from MutualInformation); ρ and p are driver
-    arithmetic on the single aggregate row.  ``transform(df)`` → one row
-    ``(n, rho, p_value)``.
+    Scale design: rows with a null in either column are dropped;
+    ``groupBy(x, y)`` collapses ties to the joint relation (multiplicity
+    c), and ρ comes from exact integer sums of doubled midranks (n, Σc·rx,
+    Σc·ry, Σc·rx², Σc·ry², Σc·rx·ry), bit-identical under any partitioning.
+    A joint relation within the driver budget (bounded by n, counted when
+    n is over it: ``dataflow.sized``) is collected once and ranked in
+    numpy, its products summed exactly by ``_exact_dot``; a larger one
+    joins the ``_midranks`` of each marginal back for decimal(38,0)
+    sums.  ``transform(df)`` → one row ``(n, rho, p_value)``.
     """
 
     xCol = StringParam("xCol", "First numeric column.", "x")
@@ -212,35 +199,53 @@ class SpearmanCorrelation(AlgoOperator):
         base = (df.select(F.col(xc).cast("double").alias("x"),
                           F.col(yc).cast("double").alias("y"))
                 .filter(F.col("x").isNotNull() & F.col("y").isNotNull()))
-        rx = _midranks(base, "x").withColumnRenamed("r2", "rx")
-        ry = _midranks(base, "y").withColumnRenamed("r2", "ry")
-        j = (base.join(rx, base["x"] == rx["v"]).drop("v")
-             .join(ry, base["y"] == ry["v"]).drop("v"))
-        # decimal(38,0) sums: exact integers (no int64 overflow at any
-        # corpus size, no float rounding), so the aggregate is bit-identical
-        # under any partitioning
-        dx = F.col("rx").cast("decimal(19,0)")
-        dy = F.col("ry").cast("decimal(19,0)")
-        a = j.agg(F.count("*").alias("n"),
-                  F.sum(dx).alias("sx"), F.sum(dy).alias("sy"),
-                  F.sum((dx * dx).cast("decimal(38,0)")).alias("sxx"),
-                  F.sum((dy * dy).cast("decimal(38,0)")).alias("syy"),
-                  F.sum((dx * dy).cast("decimal(38,0)")).alias("sxy")).first()
-        n = int(a["n"])
+        n = base.count()
         schema = "n long, rho double, p_value double"
         if n < 2:
-            return [spark.createDataFrame(
-                [(n, float("nan"), float("nan"))], schema)]
+            return [driver_frame(spark, [(n, float("nan"), float("nan"))],
+                                 schema)]
+        joint = sized(base.groupBy("x", "y").agg(F.count("*").alias("c")),
+                      n)
+        held = [joint]
+        try:
+            if joint.local:
+                t = joint.table
+                c = t.column("c").to_numpy()
+                rx = _midranks_local(t.column("x"), c)[0]
+                ry = _midranks_local(t.column("y"), c)[0]
+                # Σ c·r ≤ n·(2n + 1) fits int64; the squares need _exact_dot
+                a = {"sx": int((c * rx).sum()), "sy": int((c * ry).sum()),
+                     "sxx": _exact_dot(c, rx * rx),
+                     "syy": _exact_dot(c, ry * ry),
+                     "sxy": _exact_dot(c, rx * ry)}
+            else:
+                j = joint.frame
+                for k in ("x", "y"):
+                    j = j.join(_midranks(joint.frame, k, joint.rows, held)
+                               .select(F.col("v").alias(k),
+                                       F.col("r2").alias("r" + k)), k)
+                # decimal(38,0) sums: exact integers, no int64 overflow
+                c, rx, ry = (F.col(k).cast("decimal(19,0)")
+                             for k in ("c", "rx", "ry"))
+                wx, wy = ((c * r).cast("decimal(38,0)") for r in (rx, ry))
+                a = j.agg(F.sum(wx).alias("sx"), F.sum(wy).alias("sy"),
+                          F.sum(wx * rx).alias("sxx"),
+                          F.sum(wy * ry).alias("syy"),
+                          F.sum(wx * ry).alias("sxy")).first().asDict()
+                a = {k: int(v) for k, v in a.items()}
+        finally:
+            for r in held:
+                r.release()
         num = n * a["sxy"] - a["sx"] * a["sy"]
         den = math.sqrt(float(n * a["sxx"] - a["sx"] ** 2)
                         * float(n * a["syy"] - a["sy"] ** 2))
         if den == 0:  # a constant column: rho undefined
-            return [spark.createDataFrame(
-                [(n, float("nan"), float("nan"))], schema)]
+            return [driver_frame(spark, [(n, float("nan"), float("nan"))],
+                                 schema)]
         rho = max(-1.0, min(1.0, float(num) / den))
         if abs(rho) >= 1.0 or n <= 2:
             p = 0.0 if n > 2 else float("nan")
         else:
             t2 = rho * rho * (n - 2) / (1.0 - rho * rho)
             p = f_sf(t2, 1, n - 2)
-        return [spark.createDataFrame([(n, rho, float(p))], schema)]
+        return [driver_frame(spark, [(n, rho, float(p))], schema)]

@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..api import AlgoOperator
+from ..common.dataflow import driver_frame, sized
 from ..common.special import chi2_sf, f_sf
 from ..param import (HasFeaturesCol, HasFlatten, HasLabelCol, Param,
                      StringParam)
@@ -133,12 +134,12 @@ class KolmogorovSmirnovTest(AlgoOperator):
     binning-free statistic).
 
     Scale design: the sup runs through BinaryClassificationEvaluator's
-    exact KS machinery — ``groupBy(value)`` tie collapse, range-partitioned
-    per-partition cumsums with broadcast prefix offsets
-    (``evaluation/binaryclassification.py``) — so there is NO global
+    exact KS machinery — ``groupBy(value)`` tie collapse, then
+    ``ordered_cumsum``'s running sums, in driver memory or
+    range-partitioned by the driver budget — so there is NO global
     single-task sort and NO corpus-sized collect; group totals are one
-    extra aggregate.  ``transform(df)`` → one row
-    ``(n_a, n_b, statistic, p_value)``.
+    extra aggregate.  A null or NaN value raises ``ValueError``.
+    ``transform(df)`` → one row ``(n_a, n_b, statistic, p_value)``.
     """
 
     valueCol = StringParam("valueCol", "Numeric sample column.", "value")
@@ -152,9 +153,16 @@ class KolmogorovSmirnovTest(AlgoOperator):
         (df,) = inputs
         spark = df.sparkSession
         vcol, gcol = self.get_("valueCol"), self.get_("groupCol")
-        counts = {r["g"]: r["c"] for r in
-                  df.groupBy(F.col(gcol).alias("g"))
-                    .agg(F.count("*").alias("c")).collect()}
+        v = F.col(vcol).cast("double")
+        rows = (df.groupBy(F.col(gcol).alias("g"))
+                .agg(F.count("*").alias("c"),
+                     F.count(F.when(v.isNull() | F.isnan(v), 1))
+                     .alias("bad")).collect())
+        if any(r["bad"] for r in rows):
+            raise ValueError(
+                f"KolmogorovSmirnovTest: valueCol '{vcol}' has null or "
+                f"NaN values")
+        counts = {r["g"]: r["c"] for r in rows}
         if len(counts) != 2:
             raise ValueError(
                 f"KolmogorovSmirnovTest needs exactly 2 groups in "
@@ -176,8 +184,8 @@ class KolmogorovSmirnovTest(AlgoOperator):
         ne = na * nb / (na + nb)
         lam = (np.sqrt(ne) + 0.12 + 0.11 / np.sqrt(ne)) * d
         p = kolmogorov_sf(float(lam))
-        return [spark.createDataFrame(
-            [(na, nb, d, p)],
+        return [driver_frame(
+            spark, [(na, nb, d, p)],
             "n_a long, n_b long, statistic double, p_value double")]
 
 
@@ -283,14 +291,13 @@ class MannWhitneyUTest(AlgoOperator):
     completing the stats set next to ChiSqTest/ANOVA/F and the
     TwoProportionZTest.
 
-    Pooled average-tie midranks come from the Spearman machinery
-    (``correlation._midranks``: groupBy tie collapse + range-partition
-    cumsum — no global sort, nothing corpus-sized collected); doubled
-    midranks are integers, so the per-group rank sums are EXACT decimal
-    aggregates and 2·U1 = Σ2r₁ − n1(n1+1) is an exact integer.  The
-    tie-corrected normal z and its p-value (z² ~ χ²₁) are driver
-    arithmetic; every float step is a fixed-order division/sqrt of
-    exact integers, so z replays bit-identically in SQL.
+    Rows with a null group or value are dropped; ``groupBy(group, value)``
+    collapses ties, and pooled average-tie midranks come from the Spearman
+    machinery (``correlation._midranks_local`` in driver memory, the
+    distributed ``_midranks`` above the driver budget).  Doubled midranks
+    are integers, so the rank sums and 2·U1 = Σ2r₁ − n1(n1+1) are EXACT.
+    The tie-corrected normal z and its p-value (z² ~ χ²₁) are fixed-order
+    float steps on exact integers, so z replays bit-identically in SQL.
 
     ``transform(df)`` → one row (group1, group2, n1, n2, u1_x2, z,
     p_value); groups ascending by name, U1 is group1's statistic.
@@ -303,30 +310,50 @@ class MannWhitneyUTest(AlgoOperator):
     def transform(self, *inputs: DataFrame) -> list[DataFrame]:
         import math
 
-        from .correlation import _midranks
+        from .correlation import _exact_dot, _midranks, _midranks_local
         (df,) = inputs
         spark = df.sparkSession
         g = F.col(self.get_("groupCol")).cast("string")
         v = F.col(self.get_("valueCol")).cast("double")
         base = (df.filter(g.isNotNull() & v.isNotNull())
                 .select(g.alias("g"), v.alias("val")))
-        ranks = _midranks(base, "val")
-        joined = base.join(ranks, base["val"] == ranks["v"]).drop("v")
-        per = (joined.groupBy("g")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("r2").cast("decimal(38,0)")).alias("sr"))
-               .collect())
+        n, b = base.agg(F.count("*"), F.sum(F.octet_length("g"))).first()
+        joint = sized(base.groupBy("g", "val").agg(F.count("*").alias("c")),
+                      n, b or 0)
+        held = [joint]
+        try:
+            if joint.local:
+                t = joint.table
+                c = t.column("c").to_numpy()
+                r2, ties_t = _midranks_local(t.column("val"), c)
+                names, gi = np.unique(t.column("g").to_numpy(),
+                                      return_inverse=True)
+                # int64 sums: a group's Σ c·r2 is at most n·(2n + 1)
+                ng, sr = (np.zeros(len(names), np.int64) for _ in "ns")
+                np.add.at(ng, gi, c)
+                np.add.at(sr, gi, c * r2)
+                per = list(zip(names.tolist(), ng.tolist(), sr.tolist()))
+                ties = _exact_dot(ties_t, ties_t * ties_t - 1)
+            else:
+                ranks = _midranks(joint.frame, "val", joint.rows, held)
+                dec = lambda k: F.col(k).cast("decimal(38,0)")
+                per = [(r["g"], int(r["n"]), int(r["sr"])) for r in
+                       joint.frame.join(ranks.withColumnRenamed("v", "val"),
+                                        "val")
+                       .groupBy("g")
+                       .agg(F.sum("c").alias("n"),
+                            F.sum(dec("c") * dec("r2")).alias("sr"))
+                       .collect()]
+                ties = int(ranks.agg(F.sum(dec("t") * F.col("t") * F.col("t")
+                                           - F.col("t"))).first()[0] or 0)
+        finally:
+            for r in held:
+                r.release()
         if len(per) != 2:
             raise ValueError(
                 f"MannWhitneyUTest: need exactly 2 groups, saw "
-                f"{sorted(r['g'] for r in per)}")
-        per = sorted(per, key=lambda r: r["g"])
-        (g1, n1, sr1), (g2, n2, _) = [(r["g"], int(r["n"]), int(r["sr"]))
-                                      for r in per]
-        ties = int(base.groupBy("val").count()
-                   .agg(F.sum(F.col("count").cast("decimal(38,0)")
-                              * F.col("count") * F.col("count")
-                              - F.col("count"))).first()[0] or 0)
+                f"{sorted(k for k, _, _ in per)}")
+        (g1, n1, sr1), (g2, n2, _) = sorted(per)
         n = n1 + n2
         u1_x2 = sr1 - n1 * (n1 + 1)  # exact integer 2*U1
         schema = ("group1 string, group2 string, n1 long, n2 long, "
@@ -340,8 +367,9 @@ class MannWhitneyUTest(AlgoOperator):
             mu = n1 * n2 / 2.0
             z = (u1 - mu) / math.sqrt(sig2)
             p = chi2_sf(z * z, 1)
-        return [spark.createDataFrame(
-            [(g1, g2, n1, n2, int(u1_x2), float(z), float(p))], schema)]
+        return [driver_frame(
+            spark, [(g1, g2, n1, n2, int(u1_x2), float(z), float(p))],
+            schema)]
 
 
 class CohenKappaTest(AlgoOperator):

@@ -14,8 +14,10 @@ discipline:
 - **Driver-loop orchestration, cluster-side work.**  CV is a control
   loop over fits: the loop runs on the driver (SURVEY §3.2 — iteration
   collapses to driver loops), each fit/transform is the estimator's own
-  distributed job.  Nothing corpus-sized is collected here; the metric
-  reduces each scored fold to one scalar via an aggregate.
+  distributed job.  Nothing corpus-sized is collected here: the metric
+  reduces each scored fold to one scalar, and ``auc``'s tie-collapsed
+  score relation reaches the driver only when the driver budget holds
+  it (``common.dataflow.local_regime``).
 - **Deterministic selection.**  Ties on the average metric break toward
   the EARLIEST param map (stable, engine-independent).
 
@@ -23,7 +25,7 @@ discipline:
 ``"n_correct"`` (integer count — the bit-exact choice for cross-engine
 gates), ``"rmse"``, ``"mae"`` (lower is better, handled automatically),
 ``"auc"`` (tie-aware ranking quality over ``rawPredictionCol`` — the
-Mann–Whitney midrank identity, nothing collected).
+Mann–Whitney midrank identity over ``common.dataflow.ordered_cumsum``).
 A custom callable ``metric_fn(model, test_df) -> float`` overrides the
 built-ins (not persisted — models saved from a callable-metric CV
 reload with the callable absent).
@@ -38,6 +40,7 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .api import Estimator, Model, Stage
+from .common.dataflow import ordered_cumsum
 from .param import (HasLabelCol, HasPredictionCol, IntParam, Param,
                     ParamValidators, StringParam)
 
@@ -49,10 +52,9 @@ _LOWER_IS_BETTER = {"rmse", "mae"}
 
 
 def _auc_of(scored: DataFrame, label_col: str, raw_col: str) -> float:
-    """Tie-aware AUC via the Mann–Whitney midrank identity — one
-    groupBy(score) plus a fold-sized window cumsum, nothing collected
-    (the BinaryClassificationEvaluator / sliced-AUC geometry)."""
-    from pyspark.sql import Window
+    """Tie-aware AUC via the Mann–Whitney midrank identity: groupBy(score)
+    and ``ordered_cumsum``'s ascending running count, sized by the fold's
+    row count (the BinaryClassificationEvaluator / sliced-AUC geometry)."""
     from pyspark.sql.types import ArrayType
     raw = F.col(raw_col)
     if isinstance(scored.schema[raw_col].dataType, ArrayType):
@@ -62,13 +64,16 @@ def _auc_of(scored: DataFrame, label_col: str, raw_col: str) -> float:
             .filter(F.col("s").isNotNull() & F.col("y").isNotNull()))
     g = base.groupBy("s").agg(F.sum("y").alias("pos"),
                               F.count(F.lit(1)).alias("tot"))
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
-    r = g.withColumn(
-        "m2", 2 * (F.sum("tot").over(w) - F.col("tot"))
-        + F.col("tot") + 1)
-    row = r.agg(F.sum("pos").alias("p"),
-                F.sum(F.col("tot") - F.col("pos")).alias("n"),
-                F.sum(F.col("pos") * F.col("m2")).alias("r2")).first()
+    cum = ordered_cumsum(g, [("s", True)], ["tot"], scored.count())
+    try:
+        row = cum.agg(lambda fn, c: {
+            "p": fn.sum(c("pos")),
+            "n": fn.sum(c("tot") - c("pos")),
+            # doubled midrank: 2·(count below) + ties + 1
+            "r2": fn.sum(c("pos") * (2 * (c("cum_tot") - c("tot"))
+                                     + c("tot") + 1))})
+    finally:
+        cum.release()
     p, n = float(row["p"] or 0.0), float(row["n"] or 0.0)
     if p == 0.0 or n == 0.0:
         raise ValueError(

@@ -602,17 +602,16 @@ def test_corpus_datasheet(spark):
 
 
 def test_key_skew_local_and_distributed_paths_match(spark, monkeypatch):
-    """The ordered-collect driver path (m <= _SKEW_LOCAL_MAX) and the
-    range-partitioned distributed path must produce identical reports —
-    the distributed path is otherwise never exercised on test-sized
-    keys."""
+    """The driver-memory regime and the range-partitioned regime (the
+    driver budget pinned to 0) must produce identical reports — the
+    distributed path is otherwise never exercised on test-sized keys."""
+    from flink_ml_spark.common import dataflow
     from flink_ml_spark.llmdata import KeySkewProfiler
-    from flink_ml_spark.llmdata import profiler as prof_mod
     rows = [(f"k{i % 37}",) for i in range(1500)] + [("hot",)] * 400
     df = spark.createDataFrame(rows, "k string")
     p = KeySkewProfiler(inputCol="k", topK=3)
     local = sorted(map(tuple, p.transform(df)[0].collect()))
-    monkeypatch.setattr(prof_mod, "_SKEW_LOCAL_MAX", 0)
+    monkeypatch.setattr(dataflow, "driver_budget", lambda spark: 0)
     dist = sorted(map(tuple, p.transform(df)[0].collect()))
     assert len(local) == 38
     assert local == dist

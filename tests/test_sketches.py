@@ -201,6 +201,26 @@ def test_frequent_line_filter_broadcast_path_matches_literal(spark):
     assert got[99] is None  # null text stays null on both paths
 
 
+def test_frequent_line_filter_broadcast_follows_model_data(spark,
+                                                          monkeypatch):
+    """The broadcast drop set is cached per model; after model_data's
+    boilerplate changes, transform must drop the NEW set, not reuse the
+    stale broadcast."""
+    from flink_ml_spark.llmdata import FrequentLineFilter
+    from flink_ml_spark.llmdata import sketches as sk
+    monkeypatch.setattr(sk, "_LINE_SET_LITERAL_LIMIT", 0)  # broadcast path
+    rows = [(i, f"keep {i}\nBANNER A\nBANNER B") for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    m = FrequentLineFilter(idCol="doc_id", textCol="text", minCount=10,
+                           width=64).fit(df)
+    assert m.model_data["boilerplate"] == ["BANNER A", "BANNER B"]
+    first = {r["clean"] for r in m.transform(df)[0].collect()}
+    assert first == {f"keep {i}" for i in range(30)}
+    m.model_data["boilerplate"] = ["BANNER B"]
+    second = {r["clean"] for r in m.transform(df)[0].collect()}
+    assert second == {f"keep {i}\nBANNER A" for i in range(30)}
+
+
 def test_cms_join_path_null_key_estimate_is_null(spark, zipf_df):
     """Null keys must get NULL estimates on BOTH plan paths (the join
     path used to coalesce missing lookups to 0 — ADVICE r08)."""

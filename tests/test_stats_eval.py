@@ -110,11 +110,13 @@ def test_pr_lorenz_reference_conventions(spark):
     assert r["areaUnderROC"] == pytest.approx(1.0)
 
 
-def test_evaluator_plan_range_partitioned(spark):
-    # at scale (more distinct scores than one partition's ~64k budget) the
-    # cumulative stage must be range-partitioned (sampled boundaries, like
-    # the reference), never an unpartitioned global-sort Window
+def test_evaluator_plan_range_partitioned(spark, monkeypatch):
+    # above the driver budget (pinned to 0 here) the cumulative stage must
+    # be range-partitioned (sampled boundaries, like the reference), never
+    # an unpartitioned global-sort Window
     from pyspark.sql import functions as F
+    from flink_ml_spark.common import dataflow
+    monkeypatch.setattr(dataflow, "driver_budget", lambda spark: 0)
     df = spark.range(150_000).select(
         (F.col("id") / 150_000.0).alias("score"),
         (F.col("id") % 2).cast("double").alias("label"))
@@ -609,8 +611,9 @@ def test_sliced_auc_dominant_slice_multipartition(spark, monkeypatch):
     from pyspark.sql import functions as F
     from flink_ml_spark.evaluation import (
         BinaryClassificationEvaluator, SlicedBinaryClassificationEvaluator)
-    from flink_ml_spark.evaluation import sliced as sliced_mod
-    monkeypatch.setattr(sliced_mod, "_ROWS_PER_PART", 40)
+    from flink_ml_spark.common import dataflow
+    monkeypatch.setattr(dataflow, "driver_budget", lambda spark: 0)
+    monkeypatch.setattr(dataflow, "_RANGE_ROWS", 40)
     rng = np.random.RandomState(5)
     rows = []
     for i in range(1200):  # dominant slice: distinct-ish scores + ties

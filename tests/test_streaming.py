@@ -580,3 +580,22 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
                           r["stages_completed"])
            for r in batch.collect()}
     assert got == exp
+
+
+def test_streaming_funnel_query_pins_no_data_batches(spark, sf_dir):
+    """The registry's streaming_funnel emits its final rows in the
+    engine's trailing no-data micro-batch; with that engine default off
+    in the session it must still match the batch funnel, and leave the
+    session value as it found it."""
+    from flink_ml_spark.queries.streaming_queries import (
+        funnel_conversion, streaming_funnel)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = sorted(map(tuple, streaming_funnel(spark, sf_dir).collect()))
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+    want = sorted(map(tuple, funnel_conversion(spark, sf_dir).collect()))
+    assert got and got == want
